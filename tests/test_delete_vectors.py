@@ -578,3 +578,179 @@ class TestSnapshotMoR:
                 == [f"k{i:03d}" for i in range(4, 10)]
         finally:
             snap.release()
+
+
+def _mk_ab(spark, wh, delete_vectors, extra=()):
+    """A flushed 12-row table whose recipe ends in a deletion vector (a
+    pending delete epoch), with ``extra`` rows appended unvalidated
+    first (duplicate or null PKs)."""
+    from pyspark.sql import types as T
+    db = ToStoreSpark(spark, warehouse=wh)
+    db.delete_vectors = delete_vectors
+    db.create_table(TableSchema(
+        name="notes", primary_key=PrimaryKeyConfig(name="id"),
+        fields=[FieldSchema(name="body", type=DataType.text),
+                FieldSchema(name="n", type=DataType.integer),
+                FieldSchema(name="code", type=DataType.text, unique=True),
+                FieldSchema(name="ts", type=DataType.datetime)]))
+    db.batch_insert("notes", [{"id": f"k{i:03d}", "body": f"b{i}", "n": i,
+                               "code": f"c{i}"} for i in range(12)])
+    db.flush()
+    if extra:
+        loose = T.StructType([T.StructField(f.name, f.dataType, True)
+                              for f in db.df("notes").schema.fields])
+        db.append_rows("notes", spark.createDataFrame(
+            [{"ts": None, **r} for r in extra], loose))
+        db.flush()
+    db.delete("notes").where("id", "=", "k011").execute()
+    db.flush()
+    if delete_vectors:
+        assert db._tables[("default", "notes")]["ops"][-1][0] == "del"
+    return db
+
+
+def _rows(db):
+    return sorted((tuple(r) for r in db.df("notes").collect()), key=repr)
+
+
+def _vector_dirs(wh):
+    return sum(1 for d, _, _ in os.walk(wh) if d.endswith("_deletes"))
+
+
+_DUP = {"id": "k001", "body": "DUP", "n": 77, "code": "d77"}
+_NULL = {"id": None, "body": "NUL", "n": 78, "code": "d78"}
+
+# case -> (extra rows, builder chain, expected n, vector delta kept)
+_AB_CASES = {
+    "pk_hit": ((), lambda b: b.where("id", "=", "k003"), 1, True),
+    "no_match": ((), lambda b: b.where("n", "=", 999), 0, False),
+    "dup_pk": ((_DUP,), lambda b: b.where("n", "=", 77), 1, False),
+    "null_pk": ((_NULL,), lambda b: b.where("n", "=", 78), 1, False),
+    "order_limit": ((), lambda b: b.where("n", ">=", 2)
+                    .order_by_desc("n").offset(1).limit(3), 3, True),
+}
+
+
+@pytest.mark.usefixtures("spark")
+class TestPinnedMutationAB:
+    """update/delete through the pinned merge-on-read path must leave
+    the same rows, in memory and after a flush, as the same mutation on
+    a ``delete_vectors=False`` engine (plain rewrite)."""
+
+    def _ab(self, spark, tmp_path, extra, mutate):
+        a = _mk_ab(spark, str(tmp_path / "a"), True, extra)
+        b = _mk_ab(spark, str(tmp_path / "b"), False, extra)
+        na, nb = mutate(a), mutate(b)
+        assert na == nb
+        assert _rows(a) == _rows(b)
+        return a, b, na
+
+    def _flushed_equal(self, spark, tmp_path, a, b):
+        mem = _rows(a)
+        a.flush()
+        b.flush()
+        assert _rows(a) == mem
+        cold = [_rows(ToStoreSpark(spark, warehouse=str(tmp_path / s)))
+                for s in ("a", "b")]
+        assert cold[0] == cold[1] == mem
+
+    @pytest.mark.parametrize("op", ["update", "delete"])
+    @pytest.mark.parametrize("case", sorted(_AB_CASES))
+    def test_mutation_matches_rewrite(self, spark, tmp_path, case, op):
+        extra, chain, want_n, vector = _AB_CASES[case]
+
+        def mutate(db):
+            b = (db.update("notes", {"body": "EDIT"}) if op == "update"
+                 else db.delete("notes"))
+            return chain(b).execute()
+
+        a, b, n = self._ab(spark, tmp_path, extra, mutate)
+        assert n == want_n
+        key = ("default", "notes")
+        assert (a._delete_deltas.get(key) is not None) is vector
+        dirs = _vector_dirs(str(tmp_path / "a"))
+        self._flushed_equal(spark, tmp_path, a, b)
+        if not vector:
+            # a vetoed or empty key set rewrites: no new vector dir
+            assert _vector_dirs(str(tmp_path / "a")) == dirs
+
+    def test_unique_update_strict_raises(self, spark, tmp_path):
+        for dv in (True, False):
+            db = _mk_ab(spark, str(tmp_path / f"u{dv}"), dv)
+            before = _rows(db)
+            with pytest.raises(ValueError, match="unique"):
+                db.update("notes", {"code": "c5"}).where("n", "<", 3).execute()
+            assert _rows(db) == before
+
+    def test_unique_update_partial(self, spark, tmp_path):
+        # k000..k002 all ask for "X": the lowest PK keeps it, the
+        # other two collide and are skipped
+        a, b, n = self._ab(
+            spark, tmp_path, (),
+            lambda db: db.update("notes", {"code": "X", "body": "E"})
+            .where("n", "<", 3).continue_on_partial_errors().execute())
+        assert n == 1
+        assert a._delete_deltas.get(("default", "notes")) is not None
+        self._flushed_equal(spark, tmp_path, a, b)
+
+    def test_update_value_reads_an_earlier_value(self, spark, tmp_path):
+        # values apply in order: "body" reads the NEW n (50), not the old
+        from tostore_spark.expr import Expr
+        a, b, n = self._ab(
+            spark, tmp_path, (),
+            lambda db: db.update("notes", {"n": 50,
+                                           "body": Expr.field("n") + 1})
+            .where("id", "=", "k003").execute())
+        assert n == 1
+        assert a._delete_deltas.get(("default", "notes")) is not None
+        hit = [r for r in _rows(a) if r[0] == "k003"]
+        assert [(r[1], r[2]) for r in hit] == [("51", 50)]
+        self._flushed_equal(spark, tmp_path, a, b)
+
+    def test_server_timestamp_flushes_the_in_memory_value(self, spark,
+                                                          tmp_path):
+        wh = str(tmp_path / "a")
+        db = _mk_ab(spark, wh, True)
+        assert db.update("notes").where("n", "<", 3) \
+            .set_server_timestamp("ts") == 3
+        assert db._delete_deltas.get(("default", "notes")) is not None
+        mem = _rows(db)
+        assert _rows(db) == mem           # one instant, however often read
+        assert sum(r[-1] is not None for r in mem) == 3
+        db.flush()
+        assert _rows(db) == mem
+        assert _rows(ToStoreSpark(spark, warehouse=wh)) == mem
+
+    @pytest.mark.parametrize("op", ["update", "delete"])
+    def test_reads_table_plan_twice(self, spark, tmp_path, monkeypatch,
+                                    op):
+        """A PK update and a range delete read the table plan (a plan
+        with a file scan) at most twice: the pin and the veto probe.
+        The counts and the epoch deltas come from the pin."""
+        from pyspark.sql.classic.dataframe import DataFrame
+        db = _mk_ab(spark, str(tmp_path / "a"), True)
+        passes = []
+
+        def spy(name):
+            orig = getattr(DataFrame, name)
+
+            def call(self, *a, **k):
+                if name != "localCheckpoint" or k.get("eager", a[:1] != (False,)):
+                    plan = self._jdf.queryExecution().executedPlan().toString()
+                    if "FileScan" in plan:
+                        passes.append(name)
+                return orig(self, *a, **k)
+            monkeypatch.setattr(DataFrame, name, call)
+
+        for name in ("collect", "count", "localCheckpoint"):
+            spy(name)
+        if op == "update":
+            n = db.update("notes", {"body": "E"}).where("id", "=", "k004") \
+                .execute()
+            assert n == 1
+        else:
+            assert db.delete("notes").where("n", ">=", 2) \
+                .where("n", "<", 6).execute() == 4
+        monkeypatch.undo()
+        assert len(passes) <= 2, passes
+        assert db._delete_deltas.get(("default", "notes")) is not None

@@ -117,6 +117,25 @@ def test_agg_nonnumeric_skip(db, spark):
     assert out["a"] == 15.5 / 2
 
 
+def test_agg_minmax_timestamp_ntz(db, spark):
+    """min/max keep a TIMESTAMP_NTZ column's type (the plain-parquet
+    timestamp Spark 4 reads) instead of casting it to double."""
+    import datetime as dt
+    from pyspark.sql import types as T
+    ts = [dt.datetime(2024, 1, 2, 3, 4, 5), dt.datetime(2023, 6, 7),
+          dt.datetime(2025, 12, 31, 23, 59)]
+    sdf = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(ts)] + [(9, None)],
+        T.StructType([T.StructField("id", T.LongType()),
+                      T.StructField("t", T.TimestampNTZType())]))
+    db.register_table("ntz_t", df=sdf)
+    out = (db.query("ntz_t").select_agg([Agg.min("t", "lo"), Agg.max("t", "hi")])
+           .df())
+    assert isinstance(out.schema["lo"].dataType, T.TimestampNTZType)
+    row = out.collect()[0]
+    assert (row["lo"], row["hi"]) == (min(ts), max(ts))
+
+
 def test_query_cache_hit_and_invalidation(spark):
     from tostore_spark import ToStoreSpark
 

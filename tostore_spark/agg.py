@@ -118,7 +118,8 @@ class Agg:
             return fn(num).alias(self.output_name)
 
         if self.kind in ("min", "max"):
-            if isinstance(st, (T.NumericType, T.TimestampType, T.DateType,
+            if isinstance(st, (T.NumericType, T.TimestampType,
+                               T.TimestampNTZType, T.DateType,
                                T.StringType, T.BooleanType)):
                 target = col
             else:

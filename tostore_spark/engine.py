@@ -1078,12 +1078,12 @@ class ToStoreSpark:
                 def _pin(delta):
                     # pin the delta's rows now: its lineage may reference
                     # frames a later mutation invalidates pre-flush.
-                    # Callers that built the delta from driver-resident
-                    # rows (insert's createDataFrame batch) vouch via
-                    # ``deltas_pinned`` — a parallelized local collection
-                    # is self-contained, so the checkpoint job would pin
-                    # nothing it doesn't already hold (r17: one Spark job
-                    # per mutation saved).
+                    # Callers whose delta is already self-contained vouch
+                    # via ``deltas_pinned``: a parallelized local
+                    # collection (insert's createDataFrame batch), or a
+                    # column selection of an eager pin the caller took
+                    # (update/delete's matched rows).  A second checkpoint
+                    # would re-run the delta's plan for nothing.
                     if deltas_pinned:
                         return delta
                     return delta.localCheckpoint(eager=True)

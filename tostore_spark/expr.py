@@ -85,24 +85,29 @@ class Expr:
         return Expr("if", cond=cond, then=_wrap(value), otherwise=_wrap(otherwise))
 
     # ---- compile ------------------------------------------------------
-    def to_column(self, resolver, is_update_col: Column | None = None) -> Column:
+    def to_column(self, resolver, is_update_col: Column | None = None,
+                  now: Column | None = None) -> Column:
         """resolver: field name → Column of the *current* record value.
         ``is_update_col`` marks matched (update) vs new (insert) rows in the
-        upsert rewrite; None outside upsert (treated as update=True)."""
+        upsert rewrite; None outside upsert (treated as update=True).
+        ``now`` stands in for ``Expr.now()`` (default: the query's
+        ``current_timestamp()``, which a lazy frame re-evaluates on every
+        read)."""
         k = self.kind
+        sub = dict(resolver=resolver, is_update_col=is_update_col, now=now)
         if k == "field":
             return resolver(self.kw["name"])
         if k == "const":
             return F.lit(self.kw["value"])
         if k == "now":
-            return F.current_timestamp()
+            return F.current_timestamp() if now is None else now
         if k == "is_update":
             return is_update_col if is_update_col is not None else F.lit(True)
         if k == "is_insert":
             return ~is_update_col if is_update_col is not None else F.lit(False)
         if k == "bin":
-            l = self.kw["left"].to_column(resolver, is_update_col)
-            r = self.kw["right"].to_column(resolver, is_update_col)
+            l = self.kw["left"].to_column(**sub)
+            r = self.kw["right"].to_column(**sub)
             op = self.kw["op"]
             if op == "add": return l + r
             if op == "subtract": return l - r
@@ -112,10 +117,10 @@ class Expr:
             if op == "min": return F.least(l, r)
             if op == "max": return F.greatest(l, r)
         if k == "unary":
-            v = self.kw["operand"].to_column(resolver, is_update_col)
+            v = self.kw["operand"].to_column(**sub)
             return -v if self.kw["op"] == "negate" else F.abs(v)
         if k == "fn":
-            args = [a.to_column(resolver, is_update_col) for a in self.kw["args"]]
+            args = [a.to_column(**sub) for a in self.kw["args"]]
             fn = self.kw["fn"]
             if fn == "abs": return F.abs(args[0])
             if fn == "round": return F.round(args[0], 0)
@@ -124,9 +129,9 @@ class Expr:
             if fn == "min": return F.least(*args)
             if fn == "max": return F.greatest(*args)
         if k == "if":
-            c = self.kw["cond"].to_column(resolver, is_update_col)
-            t = self.kw["then"].to_column(resolver, is_update_col)
-            o = self.kw["otherwise"].to_column(resolver, is_update_col)
+            c = self.kw["cond"].to_column(**sub)
+            t = self.kw["then"].to_column(**sub)
+            o = self.kw["otherwise"].to_column(**sub)
             return F.when(c.cast("boolean"), t).otherwise(o)
         raise ValueError(f"unknown expr node: {k}")
 

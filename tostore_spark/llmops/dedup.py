@@ -216,8 +216,9 @@ def minhash_lsh_pairs(df: DataFrame, text_field: str = "text",
     stage entirely.
     """
     if index is None:
-        # eager localCheckpoint barrier so both self-join branches read the
-        # materialized index instead of recomputing the signatures; unlike
+        # lazy localCheckpoint barrier: the index materializes at the
+        # first action and both self-join branches read those blocks
+        # instead of recomputing the signatures; unlike
         # .persist() the blocks are released by the ContextCleaner once the
         # frame is unreferenced, so repeated calls don't pin executor
         # memory.  Trade-off: checkpoint blocks have no lineage, so losing

@@ -1060,7 +1060,9 @@ def graph_search_many(graph: DataFrame, corpus: DataFrame,
         # stays hash-partitioned on query_id — exactly the distribution
         # the top-ef window needs, so the window adds NO second
         # exchange.  A plain .distinct() exchanged on (query_id,
-        # node_id), which the window could not reuse.
+        # node_id), which the window could not reuse.  collect_set
+        # skips nulls, so a NULL node_id (a graph edge to nowhere)
+        # drops out of the frontier here, where .distinct() kept it.
         return (pairs.groupBy("query_id")
                      .agg(F.collect_set("node_id").alias("__ns"))
                      .select("query_id",

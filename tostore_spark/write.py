@@ -469,6 +469,31 @@ def batch_update(engine, table: str, rows: list[dict],
     return n
 
 
+def _mor_keys_sound(keys: DataFrame, survivors: DataFrame,
+                    pk: str) -> bool:
+    """Whether the pinned key frame ``keys`` may serve as a merge-on-read
+    delete delta (store.flush_tables fast_del): the PK must identify the
+    mutated rows AGAINST THE SURVIVORS.  One aggregate probe — the only
+    table pass besides the caller's pin — vetoes (False, so the flush
+    rewrites) when a surviving row shares a key (duplicate PKs can exist
+    via unvalidated bulk paths), when a key is null (a null never
+    anti-joins, so the old row would resurrect on read-back), or when
+    the key set is empty (an empty delete must not write an
+    empty-vector dir)."""
+    try:
+        shared = survivors.join(F.broadcast(keys), on=[pk], how="left_semi")
+        # per key row k=1 and z=(key is null); per shared survivor b=1
+        row = (keys.select(F.lit(1).alias("k"),
+                           F.col(pk).isNull().cast("int").alias("z"),
+                           F.lit(0).alias("b"))
+               .unionAll(shared.select(F.lit(0), F.lit(0), F.lit(1)))
+               .agg(*[F.coalesce(F.sum(c), F.lit(0)).alias(c)
+                      for c in "kzb"]).collect()[0])
+    except Exception:
+        return False
+    return row["k"] > 0 and row["z"] == 0 and row["b"] == 0
+
+
 class _MutationBuilder:
     def __init__(self, engine, table: str):
         self._engine = engine
@@ -585,15 +610,20 @@ class UpdateBuilder(_MutationBuilder):
 
     # sugar (update_builder.dart:63-209)
     def set(self, values: dict[str, Any]) -> int:
-        """Returns the matched-row count.  Counting is ONE combined driver
-        job (matched + unique-collision counts from the same aggregate);
-        set ``engine.eager_mutation_counts = False`` to skip it (returns
-        -1) when issuing many updates — the rewrite itself stays lazy
-        either way.  Exception: a STRICT update touching a declared-unique
-        field must know the collision count to decide the raise, so that
-        one job still runs (and the real matched count is returned for
-        free); ``continue_on_partial_errors()`` restores the zero-job path
-        by skipping colliding rows lazily."""
+        """Returns the matched-row count (matched minus skipped
+        collisions); ``engine.eager_mutation_counts = False`` returns -1
+        and skips the count.  A STRICT update touching a declared-unique
+        field still counts, to decide the raise.
+
+        Job shape with delete vectors on, a PK, and the PK not among the
+        new values (the merge-on-read replace epoch): the table plan is
+        read twice — one eager pin of the matched rows with their new
+        values, and the veto probe (``_mor_keys_sound``).  The counts are
+        one aggregate over the pin, and the pin's column selections are
+        the epoch's R and K; a vetoed probe drops R and K, so the flush
+        rewrites.  Without that epoch (kill switch, no PK, PK update) the
+        counts are one aggregate over the table.  The new frame itself
+        stays lazy either way."""
         if self._cond.is_empty() and not self._allow_all:
             raise ValueError("conditionless update requires allow_update_all()")
         if self._pending:
@@ -605,9 +635,14 @@ class UpdateBuilder(_MutationBuilder):
         def resolver(name: str):
             return F.col(name)
 
+        # Expr.now() is the server time of THIS call, one literal: the
+        # lazy frame, the pin and the flushed rows all hold that instant
+        import datetime
+        now = F.lit(datetime.datetime.now(datetime.timezone.utc))
         new_cols: dict[str, Column] = {}
         for fld, v in values.items():
-            newv = v.to_column(resolver) if isinstance(v, Expr) else F.lit(v)
+            newv = (v.to_column(resolver, now=now) if isinstance(v, Expr)
+                    else F.lit(v))
             if fld in df.columns:
                 ftype = dict((f.name, f.dataType) for f in df.schema.fields)[fld]
                 newv = newv.cast(ftype)
@@ -662,16 +697,33 @@ class UpdateBuilder(_MutationBuilder):
                           & ~self_only)
                 fail = fail | fail_a | fail_b
         staged = staged.withColumn("__fail", fail)
-        # ONE combined job for matched + collision counts (not one each),
-        # and ONLY when someone needs a number: eager callers want n;
-        # strict unique enforcement needs n_failed to decide the raise.
-        # eager=False + continue_on_partial_errors = zero driver jobs —
-        # colliding rows are skipped lazily by apply_c below (the ADVICE
-        # bulk-update-loop case).
         strict = not getattr(self, "_continue_partial", False)
+        # merge-on-read replace epoch (K = touched PKs, R = their new
+        # rows) needs the PK to identify the rows; a PK-mutating update
+        # is never eligible (K must be the OLD identity)
+        pk = self._engine.primary_key(self._table)
+        mor = (getattr(self._engine, "delete_vectors", True)
+               and pk is not None and pk in df.columns and pk not in new_cols)
+        helpers = temp_cols + [c for f in uniq
+                               for c in (f"__new_{f}", f"__rn_{f}",
+                                         f"__oldv_{f}", f"__oldn_{f}",
+                                         f"__oldpk_{f}")]
+        counted = staged
+        if mor:
+            # table pass 1 of 2 (the veto probe is 2): the matched rows
+            # with __fail and their new values — counts, R and K read it.
+            # Values apply one at a time, as on ``out`` below, so a value
+            # reading a field set earlier in ``values`` sees its new value
+            pin = staged.filter(F.col("__upd"))
+            for fld, newv in new_cols.items():
+                pin = pin.withColumn(fld, newv)
+            pin = pin.drop(*helpers).localCheckpoint(eager=True)
+            counted = pin
+        # count ONLY when someone needs a number: eager callers want n;
+        # strict unique enforcement needs n_failed to decide the raise
         n = -1
         if eager or (uniq and strict):
-            row = staged.agg(
+            row = counted.agg(
                 F.sum(F.col("__upd").cast("long")).alias("__n"),
                 F.sum(F.col("__fail").cast("long")).alias("__nf")).collect()[0]
             n = int(row["__n"] or 0)
@@ -683,57 +735,26 @@ class UpdateBuilder(_MutationBuilder):
                         f"{uniq} for {n_failed} record(s); use "
                         "continue_on_partial_errors() to skip them")
                 n -= n_failed
+        touched = keys_df = None
+        if mor:
+            touched = pin.filter(~F.col("__fail")).drop("__upd", "__fail")
+            keys_df = touched.select(pk)
+            # a failed row keeps its old values, so it is a survivor too
+            survivors = (df.filter(~F.coalesce(pred, F.lit(False)))
+                         .select(pk)
+                         .unionAll(pin.filter(F.col("__fail")).select(pk)))
+            if not _mor_keys_sound(keys_df, survivors, pk):
+                touched = keys_df = None
         apply_c = F.col("__upd") & ~F.col("__fail")
         out = staged
         for fld, newv in new_cols.items():
             out = out.withColumn(fld,
                                  F.when(apply_c, newv).otherwise(F.col(fld)))
-        drop = (["__upd", "__fail"] + temp_cols
-                + [c for f in uniq
-                   for c in (f"__new_{f}", f"__rn_{f}", f"__oldv_{f}",
-                             f"__oldn_{f}", f"__oldpk_{f}")])
-        out = out.drop(*drop)
-        # merge-on-read replace epoch: R = the applied rows with their
-        # new values (same staged frame — faithful), K = their PKs.
-        # Probed like the delete vector: a surviving row sharing a
-        # touched PK (duplicate-PK table, pred hit one copy) or a null
-        # touched PK would make the anti-join over/under-delete — veto
-        # to the rewrite.  A PK-mutating update is never eligible (K
-        # must be the OLD identity; new rows carry the new one).
-        touched = keys_df = None
-        pk = self._engine.primary_key(self._table)
-        if (getattr(self._engine, "delete_vectors", True)
-                and pk is not None and pk in df.columns
-                and pk not in new_cols):
-            try:
-                tf = staged.filter(apply_c)
-                for fld, newv in new_cols.items():
-                    tf = tf.withColumn(fld, newv)
-                tf = tf.drop(*drop)
-                keys_df = tf.select(pk)
-                survivors = staged.filter(~apply_c).select(pk)
-                bad = (keys_df.filter(F.col(pk).isNull())
-                       .unionAll(survivors.join(F.broadcast(keys_df),
-                                                on=[pk],
-                                                how="left_semi")))
-                probe = (keys_df.limit(1)
-                         .select(F.lit("k").alias("t"))
-                         .unionAll(bad.limit(1)
-                                   .select(F.lit("b").alias("t")))
-                         .collect())
-                tags = {r["t"] for r in probe}
-                touched = (tf if "b" not in tags and "k" in tags
-                           else None)
-            except Exception:
-                touched = None
         # a unique-checked rewrite carries a window + aggregate-join in its
         # lineage — weight it so the localCheckpoint barrier arrives sooner
-        if touched is not None:
-            self._engine.set_df(self._table, out, weight=4 if uniq else 1,
-                                append_delta=touched,
-                                delete_delta=keys_df)
-        else:
-            self._engine.set_df(self._table, out, weight=4 if uniq else 1)
+        self._engine.set_df(self._table, out.drop("__upd", "__fail", *helpers),
+                            weight=4 if uniq else 1, append_delta=touched,
+                            delete_delta=keys_df, deltas_pinned=True)
         return n
 
     def increment(self, field: str, by: Any = 1) -> int:
@@ -768,49 +789,23 @@ class DeleteBuilder(_MutationBuilder):
             raise ValueError("conditionless delete requires allow_delete_all()")
         df, pred, temp_cols = self._limited_predicate()
         doomed = df.filter(pred)
-        n = (doomed.count()
-             if getattr(self._engine, "eager_mutation_counts", True) else -1)
-        self._cascade(doomed.drop(*temp_cols) if temp_cols else doomed)
-        out = df.filter(~F.coalesce(pred, F.lit(False)))
-        for c in temp_cols:
-            out = out.drop(c)
-        self._engine.set_df(self._table, out,
-                            delete_delta=self._delete_keys(doomed, out))
-        return n
-
-    def _delete_keys(self, doomed: DataFrame, out: DataFrame):
-        """The deletion-vector key frame (store.flush_tables fast_del),
-        or None to fall back to the rewrite flush.  Sound only when the
-        PK uniquely identifies the doomed rows AGAINST THE SURVIVORS:
-        one bounded probe checks that no surviving row shares a doomed
-        PK (duplicate PKs can exist via unvalidated bulk paths) and
-        that no doomed PK is null (a null key never anti-joins, which
-        would resurrect the row on read-back).  The probe costs one
-        tiny job per delete; ``engine.delete_vectors = False`` turns
-        the whole path off."""
+        out = df.filter(~F.coalesce(pred, F.lit(False))).drop(*temp_cols)
         eng = self._engine
-        if not getattr(eng, "delete_vectors", True):
-            return None
         pk = eng.primary_key(self._table)
-        if pk is None or pk not in doomed.columns:
-            return None
-        try:
-            keys = doomed.select(pk)
-            bad = (keys.filter(F.col(pk).isNull())
-                   .unionAll(out.join(F.broadcast(keys), on=[pk],
-                                      how="left_semi").select(pk)))
-            # ONE action: 'k' proves the key set non-empty (an empty
-            # delete must not write an empty-vector dir), 'b' vetoes
-            probe = (keys.limit(1).select(F.lit("k").alias("t"))
-                     .unionAll(bad.limit(1)
-                               .select(F.lit("b").alias("t")))
-                     .collect())
-            tags = {r["t"] for r in probe}
-            if "b" in tags or "k" not in tags:
-                return None
-            return keys
-        except Exception:
-            return None
+        keys = None
+        counted = doomed
+        if (getattr(eng, "delete_vectors", True)
+                and pk is not None and pk in df.columns):
+            # table pass 1 of 2 (the veto probe is 2): the doomed PKs —
+            # the count and the deletion vector both read this pin
+            keys = counted = doomed.select(pk).localCheckpoint(eager=True)
+        n = (counted.count()
+             if getattr(eng, "eager_mutation_counts", True) else -1)
+        self._cascade(doomed.drop(*temp_cols) if temp_cols else doomed)
+        if keys is not None and not _mor_keys_sound(keys, out, pk):
+            keys = None
+        eng.set_df(self._table, out, delete_delta=keys, deltas_pinned=True)
+        return n
 
     def _cascade(self, doomed: DataFrame) -> None:
         from tostore_spark.schema import ForeignKeyAction
